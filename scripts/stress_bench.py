@@ -111,7 +111,7 @@ def main() -> int:
             try:
                 stats = materialize_graph(
                     build_triples(spark, src, PipelineConfig(canonicalize=True)),
-                    out_dir, spark=spark, n_buckets=64, files_per_bucket=8,
+                    out_dir, spark=spark, n_buckets=64,
                 )
                 return {"edges": stats["edges"], "vertices": stats["vertices"]}
             finally:

@@ -3,6 +3,7 @@ appending a second batch to a persisted graph yields exactly the same edge
 and vertex sets as building everything in one shot, and touches only the
 buckets the new batch hashes into."""
 
+import json
 import os
 import shutil
 import tempfile
@@ -209,5 +210,65 @@ def test_add_content_adopts_persisted_bucketing(spark):
         materialize_graph(build_triples(spark, src), full_out, spark=spark,
                           n_buckets=8)
         assert _edge_set(spark, out) == _edge_set(spark, full_out)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def _bucket_dir_files(out_dir):
+    """{'edges/repo_bucket=b' | 'vertices/v_bucket=b' -> sorted part-file
+    names + sizes} for every bucket directory of the graph."""
+    snap = {}
+    for table in ("edges", "vertices"):
+        root = os.path.join(out_dir, table)
+        for d in os.listdir(root):
+            p = os.path.join(root, d)
+            if os.path.isdir(p) and "_bucket=" in d:
+                snap[f"{table}/{d}"] = sorted(
+                    (f, os.path.getsize(os.path.join(p, f)))
+                    for f in os.listdir(p) if f.endswith(".parquet")
+                )
+    return snap
+
+
+def test_write_layout_one_file_per_bucket(spark):
+    """Writes are sized to the data: on a small graph every bucket
+    directory of both tables holds exactly one parquet file, after the
+    full build and after an increment, and the increment leaves every
+    bucket directory it does not hash into untouched."""
+    src, _ = corpus_df(spark)
+    one = "svc/main_3.go"
+    first, second = src.filter(F.col("path") != one), src.filter(F.col("path") == one)
+    base = tempfile.mkdtemp(prefix="tckg_layout_")
+    out = os.path.join(base, "g")
+    try:
+        materialize_graph(build_triples(spark, first), out, spark=spark)
+        before = _bucket_dir_files(out)
+        assert any(d.startswith("edges/") for d in before)
+        assert any(d.startswith("vertices/") for d in before)
+        assert all(len(files) == 1 for files in before.values()), before
+
+        meta = os.path.join(out, "_graph_meta.json")
+        with open(meta) as f:
+            assert json.load(f) == {"n_buckets": 16}
+        # graphs written before the rebalanced layout also carry a
+        # write-fanout key; add_content must accept and ignore it
+        with open(meta, "w") as f:
+            json.dump({"n_buckets": 16, "files_per_bucket": 4}, f)
+        stats = add_content(spark, out, second)
+        after = _bucket_dir_files(out)
+        assert all(len(files) == 1 for files in after.values()), after
+
+        t2 = build_triples(spark, second)
+        names = t2.select(F.col("subj").alias("name")).union(
+            t2.select(F.col("obj").alias("name"))).distinct()
+        affected = {f"edges/repo_bucket={b}" for b in stats["affected_buckets"]} | {
+            f"vertices/v_bucket={r.b}" for r in names.select(
+                F.pmod(F.xxhash64("name"), F.lit(16)).cast("int").alias("b")
+            ).distinct().collect()
+        }
+        untouched = set(before) - affected
+        assert untouched, "fixture degenerate: every bucket affected"
+        changed = {d for d in set(before) | set(after) if before.get(d) != after.get(d)}
+        assert changed <= affected, changed - affected
     finally:
         shutil.rmtree(base, ignore_errors=True)

@@ -101,3 +101,73 @@ def test_merge_dedup_deterministic_and_partitioning_invariant(spark):
     # the two NULL rows the smaller chunk_id breaks the tie
     assert keyed["a"][3] is None and keyed["a"][9] == "k2"
     assert len(first) == 2
+
+
+_TRIPLE_COLS = ["subj", "pred", "obj", "subj_type", "obj_type",
+                "repo", "path", "commit", "sha", "chunk_id"]
+
+
+def _triple(subj, pred, obj, obj_type="section", chunk_id=None, sha="s"):
+    return (subj, pred, obj, "section", obj_type, "r", "p", "c", sha, chunk_id)
+
+
+def _canonicalize_via_cc(spark, triples):
+    """Reference canonicalization: the mapping is the connected components
+    of the normalization alias edges (component = min name), applied with
+    the chunk-object guard, then the same MERGE dedup."""
+    from textchunking_and_knowledgegraph_spark.operators.canonicalize import merge_dedup
+
+    rows = triples.collect()
+    names = sorted(
+        {r.subj for r in rows if r.subj_type != "chunk"}
+        | {r.obj for r in rows if r.obj_type != "chunk"}
+    )
+    edges = normalization_alias_edges(
+        spark.createDataFrame([(n,) for n in names], "name string")
+    )
+    comp = {r.id: r.component for r in connected_components(edges).collect()}
+    mapped = [
+        (comp.get(r.subj, r.subj), r.pred,
+         r.obj if r.obj_type == "chunk" else comp.get(r.obj, r.obj), *r[3:])
+        for r in rows
+    ]
+    return merge_dedup(spark.createDataFrame(mapped, triples.schema), _TRIPLE_COLS)
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.select(_TRIPLE_COLS).collect())
+
+
+def test_canonicalize_equals_connected_components(spark):
+    """The star mapping (each name -> its collision group's min name) must
+    equal full connected components over the same alias edges: on CJK
+    spelling variants, on singletons mixed in, and with no collision at
+    all. Chunk objects keep their id even when it collides with a name."""
+    schema = ", ".join(f"{c} string" for c in _TRIPLE_COLS)
+    cases = {
+        "cjk_variants": [
+            _triple("函数的概念", "上位", "幂函数"),
+            _triple("函数概念", "同位", "函数 的概念"),
+            _triple("函数 的概念", "上位", "指数函数", sha="t"),
+            _triple("幂函数", "同位", "集合"),  # singletons
+            _triple("函数概念", "上位", "幂函数", chunk_id="k1"),  # collapses
+            _triple("函数概念", "文本块", "函数的概念", obj_type="chunk",
+                    chunk_id="函数的概念"),
+            _triple("Set Theory", "上位", "set theory"),
+            _triple("set-theory", "同位", "集合"),
+        ],
+        "singletons_only": [
+            _triple("集合", "上位", "子集"),
+            _triple("子集", "同位", "空集"),
+            _triple("空集", "文本块", "d:0", obj_type="chunk", chunk_id="d:0"),
+        ],
+        "no_collisions": [
+            _triple("数列", "上位", "等差数列"),
+        ],
+    }
+    for name, rows in cases.items():
+        triples = spark.createDataFrame(rows, schema)
+        got = _sorted_rows(canonicalize_triples(triples))
+        assert got == _sorted_rows(_canonicalize_via_cc(spark, triples)), name
+        chunk_objs = {r[2] for r in rows if r[4] == "chunk"}
+        assert chunk_objs == {r[2] for r in got if r[4] == "chunk"}, name

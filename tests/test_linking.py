@@ -1,14 +1,20 @@
 """Entity-linking tests: known alias pairs must link, disjoint strings must
 not; determinism of signatures; top-1 tie-break (SURVEY.md 5.3)."""
 
+import inspect
+
+import pytest
 from pyspark.sql import functions as F
 
+from textchunking_and_knowledgegraph_spark.operators.dedup import minhash_near_dups
 from textchunking_and_knowledgegraph_spark.operators.linking import (
     _char_ngrams,
     _perm_params,
     _signature,
+    banded,
     hierarchy_triples,
     link_entities,
+    with_minhash,
 )
 from textchunking_and_knowledgegraph_spark.sources.synthetic import (
     synthesize_entity_dictionary,
@@ -181,3 +187,51 @@ def test_link_entities_join_regimes(spark):
 
     k = lambda rows: {(r.mention, r.entity, round(r.score, 9)) for r in rows}
     assert k(small.collect()) == k(large.collect())
+
+
+def _banded_literal_structs(df, bands, rows):
+    """Reference banding: one literal struct per band, ``rows`` getItems
+    each, exploded and unpacked. ``banded`` must produce the same keys."""
+    band_cols = [
+        F.struct(
+            F.lit(i).alias("band_id"),
+            F.xxhash64(F.concat_ws(",", *[
+                F.col("sig")[i * rows + j].cast("string") for j in range(rows)
+            ])).alias("band_hash"),
+        )
+        for i in range(bands)
+    ]
+    return (
+        df.withColumn("band", F.explode(F.array(*band_cols)))
+        .withColumn("band_id", F.col("band.band_id"))
+        .withColumn("band_hash", F.col("band.band_hash"))
+        .drop("band", "sig")
+    )
+
+
+_DEDUP_DEFAULTS = inspect.signature(minhash_near_dups).parameters
+
+
+@pytest.mark.parametrize(
+    "bands,rows",
+    [
+        (32, 2),  # link_entities' default
+        (
+            _DEDUP_DEFAULTS["bands"].default,
+            _DEDUP_DEFAULTS["n_perm"].default // _DEDUP_DEFAULTS["bands"].default,
+        ),
+    ],
+)
+def test_banded_matches_literal_struct_reference(spark, bands, rows):
+    entities, aliases = synthesize_entity_dictionary()
+    texts = [e["entity"] for e in entities] + [a["alias"] for a in aliases] + ["", "x"]
+    sigs = with_minhash(
+        spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id int, text string"),
+        "text",
+        bands * rows,
+    ).localCheckpoint(eager=True)
+    got, want = banded(sigs, bands, rows), _banded_literal_structs(sigs, bands, rows)
+    assert got.schema == want.schema
+    rows_got = sorted(tuple(r) for r in got.collect())
+    assert rows_got == sorted(tuple(r) for r in want.collect())
+    assert len(rows_got) == len(texts) * bands

@@ -110,3 +110,46 @@ def test_full_kg_with_linking_and_canonicalization(spark):
     # canonicalization keeps the edge-key dedup invariant
     n = triples.count()
     assert triples.dropDuplicates(["subj", "pred", "obj", "sha"]).count() == n
+
+
+def test_linked_build_reads_each_document_once(spark, monkeypatch):
+    """One Arrow crossing per document under linking + canonicalization:
+    an identity mapInPandas placed directly upstream of ``doc_facts``
+    counts every row it passes, and a full build plus materialization must
+    pass each source document exactly once (the linker's fork must not
+    re-run extraction)."""
+    import shutil
+    import tempfile
+
+    from textchunking_and_knowledgegraph_spark.plans import pipeline
+    from textchunking_and_knowledgegraph_spark.plans.materialize import materialize_graph
+
+    src, _ = corpus_df(spark)
+    titles = [
+        r.section_title
+        for r in build_chunks(spark, src).filter(F.col("level") > 0)
+        .select("section_title").distinct().limit(12).collect()
+    ]
+    dictionary = spark.createDataFrame([(t,) for t in titles], "entity string")
+    reads = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            reads.add(len(b))
+            yield b
+
+    doc_facts = pipeline.doc_facts
+    monkeypatch.setattr(
+        pipeline, "doc_facts",
+        lambda df, **kw: doc_facts(df.mapInPandas(count_rows, df.schema), **kw),
+    )
+    cfg = pipeline.PipelineConfig(
+        link_entities=True, canonicalize=True, dictionary=dictionary
+    )
+    out = tempfile.mkdtemp(prefix="tckg_once_")
+    try:
+        stats = materialize_graph(build_triples(spark, src, cfg), out, spark=spark)
+        assert stats["edges"] > 0
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+    assert reads.value == src.count()

@@ -1,13 +1,17 @@
-"""Canonicalization: connected components via iterative min-label propagation.
+"""Canonicalization: normalization-key alias groups, and connected components
+via iterative min-label propagation.
 
 The scale-out of the reference's single-node dedup-and-vote
 (`EntityLinking/Entity_Linking.py:43-72` ordered dedup;
 `StoreToNeo4j/Neo4j_functions.py:156-166` label-propagation vote): alias
-edges (from linking + exact normalized-name matches) define an undirected
-graph; each component collapses to one representative (its lexicographically
-smallest member -- deterministic).
+edges define an undirected graph; each component collapses to one
+representative (its lexicographically smallest member -- deterministic).
+``canonicalize_triples`` needs no iteration (its alias groups are stars);
+``connected_components`` serves the general alias graphs of the
+near-duplicate operators (``operators/dedup.py``,
+``plans/incremental_dedup.py``).
 
-Physical plan per iteration: two hash joins (labels -> neighbor minimum),
+Physical plan per CC iteration: two hash joins (labels -> neighbor minimum),
 ``localCheckpoint()`` to truncate lineage (SURVEY.md 4.2). Min-label is
 monotonically decreasing -> guaranteed termination; realistic alias-graph
 diameter keeps iterations <= ~15.
@@ -131,16 +135,18 @@ def normalization_alias_edges(names: DataFrame, name_col: str = "name") -> DataF
     )
 
 
-def canonicalize_triples(
-    triples: DataFrame,
-    extra_alias_edges: DataFrame | None = None,
-) -> DataFrame:
-    """Map triple subj/obj to canonical representatives (two hash joins after
-    a components build over normalization + provided alias edges). Chunk-id
-    objects are never canonicalized (they are content addresses, not names).
+def canonicalize_triples(triples: DataFrame) -> DataFrame:
+    """Map triple subj/obj to canonical representatives (two hash joins
+    against the normalization alias mapping). Chunk-id objects are never
+    canonicalized (they are content addresses, not names).
 
-    The input is checkpointed first: this operator consumes ``triples`` four
-    times (name collection + CC + two endpoint joins) and would otherwise
+    ``normalization_alias_edges`` points every member of a collision group
+    at the group's min name, so each group is a star and already its own
+    connected component: the alias edges ARE the name -> component-min
+    mapping, and no label-propagation loop is needed.
+
+    The input is checkpointed first: this operator consumes ``triples``
+    three times (name collection + two endpoint joins) and would otherwise
     re-execute the whole extraction subtree per consumer. Eager: lazy
     localCheckpoints truncate lineage mid-job and straggler completions then
     hit unregistered accumulators (DAGScheduler error noise)."""
@@ -156,24 +162,20 @@ def canonicalize_triples(
         )
         .filter(F.col("v.t") != "chunk")
         .select(F.col("v.name").alias("name"))
-        .distinct()
     )
-    edges = normalization_alias_edges(names)
-    if extra_alias_edges is not None:
-        edges = edges.unionByName(extra_alias_edges.select("src", "dst")).distinct()
-    if edges.isEmpty():
-        return merge_dedup(triples, triples.columns)
-    mapping = connected_components(edges).select(
-        F.col("id").alias("name"), F.col("component").alias("canonical")
-    )
+    mapping = normalization_alias_edges(names)
     t = (
-        triples.join(mapping.withColumnRenamed("name", "subj"), "subj", "left")
+        triples.join(
+            mapping.select(F.col("src").alias("subj"), F.col("dst").alias("canonical")),
+            "subj",
+            "left",
+        )
         .withColumn("subj", F.coalesce("canonical", "subj"))
         .drop("canonical")
     )
     t = (
         t.join(
-            mapping.withColumnRenamed("name", "obj").withColumnRenamed("canonical", "ocanon"),
+            mapping.select(F.col("src").alias("obj"), F.col("dst").alias("ocanon")),
             "obj",
             "left",
         )

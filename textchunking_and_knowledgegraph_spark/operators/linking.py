@@ -138,22 +138,16 @@ def with_minhash(df: DataFrame, text_col: str, n_perm: int = _N_PERM_DEFAULT) ->
 
 def banded(df: DataFrame, bands: int, rows: int) -> DataFrame:
     """Explode the signature into (band_id, band_hash) keys. band_hash is the
-    xxhash of the band's row slice -- a plain column, joinable, AQE-friendly."""
-    band_cols = [
-        F.struct(
-            F.lit(i).alias("band_id"),
-            F.xxhash64(F.concat_ws(",", *[
-                F.col("sig")[i * rows + j].cast("string") for j in range(rows)
-            ])).alias("band_hash"),
-        )
-        for i in range(bands)
-    ]
-    return (
-        df.withColumn("band", F.explode(F.array(*band_cols)))
-        .withColumn("band_id", F.col("band.band_id"))
-        .withColumn("band_hash", F.col("band.band_hash"))
-        .drop("band", "sig")
+    xxhash of the band's row slice -- a plain column, joinable, AQE-friendly.
+    All band keys come from ONE higher-order ``transform`` expanded by one
+    ``inline``: the plan stays a few nodes whatever ``bands`` is, so query
+    planning time does not grow with the band count."""
+    keys = F.expr(
+        f"transform(sequence(0, {bands - 1}), i -> struct("
+        f"i AS band_id, xxhash64(array_join(transform("
+        f"slice(sig, i * {rows} + 1, {rows}), x -> cast(x AS string)), ',')) AS band_hash))"
     )
+    return df.select(*[c for c in df.columns if c != "sig"], F.inline(keys))
 
 
 @F.pandas_udf(T.DoubleType())

@@ -50,15 +50,13 @@ def add_content(
     # adopt the bucketing the graph was WRITTEN with: a mismatched
     # n_buckets would hash repos into different partitions than their
     # existing rows, break the anti-join, and write duplicates.
+    # Other keys (older graphs also carry a write-fanout knob) are ignored.
     meta_path = os.path.join(output_dir, "_graph_meta.json")
-    files_per_bucket = 4
     if os.path.exists(meta_path):
         import json
 
         with open(meta_path) as f:
-            meta = json.load(f)
-        n_buckets = int(meta["n_buckets"])
-        files_per_bucket = int(meta.get("files_per_bucket", files_per_bucket))
+            n_buckets = int(json.load(f)["n_buckets"])
 
     new_edges = (
         build_triples(spark, new_source, cfg)
@@ -87,14 +85,11 @@ def add_content(
         )
         incoming = new_edges.join(existing, EDGE_KEY, "left_anti")
         merged = existing.unionByName(incoming.select(*existing.columns))
-        # salt the write partitioning: repo_bucket alone = one multi-TB
-        # task per bucket at scale (same fix as materialize_graph);
-        # files_per_bucket adopted from _graph_meta.json above
-        salt = F.pmod(F.xxhash64("subj"), F.lit(files_per_bucket))
+        # rebalance, as in materialize_graph: AQE sizes the write tasks to
+        # the affected buckets' data (one file per small bucket, a large
+        # bucket split at the advisory size)
         (
-            merged.repartition(
-                len(affected) * files_per_bucket, F.col("repo_bucket"), salt
-            )
+            merged.hint("rebalance", "repo_bucket")
             .sortWithinPartitions("repo_bucket", "subj")
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -131,24 +126,19 @@ def add_content(
             # root-level files a dynamic overwrite would leave behind);
             # every subsequent increment is bucket-incremental.
             existing_v = vertices_raw.localCheckpoint(eager=True)
-            n_write_buckets = n_buckets
         else:
             existing_v = (
                 vertices_raw.filter(F.col("v_bucket").isin(affected_v))
                 .drop("v_bucket")
                 .localCheckpoint(eager=True)
             )
-            n_write_buckets = max(1, len(affected_v))
         merged_v = merge_vertices(
             existing_v, new_v.drop("v_bucket")
         ).withColumn(
             "v_bucket", F.pmod(F.xxhash64("name"), F.lit(n_buckets)).cast("int")
         )
-        salt_v = F.pmod(F.xxhash64("name", "type"), F.lit(files_per_bucket))
         vwriter = (
-            merged_v.repartition(
-                n_write_buckets * files_per_bucket, F.col("v_bucket"), salt_v
-            )
+            merged_v.hint("rebalance", "v_bucket")
             .sortWithinPartitions("v_bucket", "name")
             .write.mode("overwrite")
         )

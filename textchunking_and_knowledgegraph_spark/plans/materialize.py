@@ -58,7 +58,6 @@ def materialize_graph(
     checkpoint_dir: str | None = None,
     spark: SparkSession | None = None,
     n_buckets: int = 16,
-    files_per_bucket: int = 4,
 ) -> dict:
     """Write edge table (bucketed by repo hash, resumable) + vertex table.
 
@@ -71,10 +70,9 @@ def materialize_graph(
     # persist the layout parameters: an incremental update with a DIFFERENT
     # n_buckets would hash the same repo into a different partition, miss
     # existing rows in its anti-join, and write duplicates. add_content
-    # reads this and adopts the stored bucketing.
-    os.makedirs(output_dir, exist_ok=True)
-    with open(os.path.join(output_dir, "_graph_meta.json"), "w") as f:
-        json.dump({"n_buckets": n_buckets, "files_per_bucket": files_per_bucket}, f)
+    # reads this and adopts the stored bucketing. Written atomically: a
+    # kill mid-write must not leave a truncated meta behind.
+    _commit(output_dir, "_graph_meta", {"n_buckets": n_buckets})
 
     edges = (
         triples.dropDuplicates(EDGE_KEY)
@@ -99,19 +97,16 @@ def materialize_graph(
 
         # ONE write for every pending bucket: O(1) Spark jobs regardless of
         # n_buckets (the round-1 per-bucket loop issued n_buckets sequential
-        # full passes). Partitioning key = (repo_bucket, subj-hash salt):
-        # repartitioning on repo_bucket ALONE would make each bucket a
-        # single task/file -- a multi-TB task at 100 TB scale. The salt
-        # gives files_per_bucket parallel writers per bucket directory
-        # (size files_per_bucket so files land ~512 MB at the target
-        # scale); sortWithinPartitions keeps the deterministic subj-ordered
-        # layout for downstream point-join locality (SURVEY.md 4.3). On a
-        # real cluster this is Iceberg overwritePartitions on bucket(repo).
-        salt = F.pmod(F.xxhash64("subj"), F.lit(files_per_bucket))
+        # full passes). The rebalance hint clusters rows by repo_bucket and
+        # lets AQE size the write tasks: small buckets coalesce into one
+        # task (one file per bucket directory), and a bucket past the
+        # advisory partition size is split across several writers -- so a
+        # mega-repo bucket is never a single multi-TB task.
+        # sortWithinPartitions keeps the deterministic subj-ordered layout
+        # for downstream point-join locality (SURVEY.md 4.3). On a real
+        # cluster this is Iceberg overwritePartitions on bucket(repo).
         (
-            pending.repartition(
-                n_buckets * files_per_bucket, F.col("repo_bucket"), salt
-            )
+            pending.hint("rebalance", "repo_bucket")
             .sortWithinPartitions("repo_bucket", "subj")
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -174,16 +169,12 @@ def materialize_graph(
         # name-hash bucketed layout (same n_buckets as edges, recorded in
         # _graph_meta.json): add_content merges vertices per affected
         # bucket with dynamic partition overwrite instead of rewriting the
-        # whole table per increment. Salted like the edge write so a
-        # bucket is never a single task/file.
+        # whole table per increment. Rebalanced like the edge write.
         bucketed_v = build_vertices(persisted).withColumn(
             "v_bucket", F.pmod(F.xxhash64("name"), F.lit(n_buckets)).cast("int")
         )
-        salt_v = F.pmod(F.xxhash64("name", "type"), F.lit(files_per_bucket))
         (
-            bucketed_v.repartition(
-                n_buckets * files_per_bucket, F.col("v_bucket"), salt_v
-            )
+            bucketed_v.hint("rebalance", "v_bucket")
             .sortWithinPartitions("v_bucket", "name")
             .write.mode("overwrite")
             .partitionBy("v_bucket")

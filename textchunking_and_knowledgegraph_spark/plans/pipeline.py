@@ -8,13 +8,14 @@
       -> structural triples (column algebra)
       -> content triples (code/SVO extractors, mapInPandas) [branch B]
       -> union + dedup
-      -> (optional) entity linking (MinHash-LSH) + canonicalization (CC)
+      -> (optional) entity linking (MinHash-LSH) + canonicalization
+         (normalization-key alias groups)
       -> vertex/edge tables
 
 Replaces the reference lifecycle `UserImplementation/UserCommand.py:25-95`
 (interactive, per-file, LLM-in-the-loop) with a declarative Catalyst plan;
 the driver<->executor boundary sits at each shuffle (salt repartition,
-triple dedup, LSH bucket exchange, CC iterations, final write).
+triple dedup, LSH bucket exchange, alias-group aggregation, final write).
 """
 
 from __future__ import annotations
@@ -116,6 +117,11 @@ def build_triples(spark: SparkSession, source, cfg: PipelineConfig | None = None
     (``extract_all_triples(src, chunk_documents(src))``) ships the corpus
     into Python twice and all chunk text back, which is the bottleneck at
     scale. Equivalence of the two plans is asserted in tests.
+
+    With linking on, ``triples`` feeds both the linker and the union with
+    its links; Spark does not reuse the extraction subtree across the two
+    union branches, so it is checkpointed (eagerly, like
+    ``canonicalize_triples``) before the fork to keep the crossing single.
     """
     cfg = cfg or PipelineConfig()
     src = prepared_source(spark, source, cfg)
@@ -124,6 +130,7 @@ def build_triples(spark: SparkSession, source, cfg: PipelineConfig | None = None
     if cfg.link_entities and cfg.dictionary is not None:
         from ..operators.linking import link_triples_to_dictionary
 
+        triples = triples.localCheckpoint(eager=True)
         linked = link_triples_to_dictionary(triples, cfg.dictionary)
         triples = triples.unionByName(linked)
     if cfg.link_entities or cfg.canonicalize:
