@@ -7,27 +7,37 @@ blocks never sentence-split; reassembly == source (overlap=0).
 
 import re
 
+import pytest
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from textchunking_and_knowledgegraph_spark import job
 from textchunking_and_knowledgegraph_spark.operators.chunker import (
     HARD_MAX,
     MIN_LEN,
     chunk_documents,
     chunk_text,
-    pack_chunks,
+    pack_spans,
     parse_sections,
     protect_blocks,
     restore_blocks,
     split_sentences,
 )
+from textchunking_and_knowledgegraph_spark.plans.pipeline import PipelineConfig
 from textchunking_and_knowledgegraph_spark.sources.io import scan_source
 from textchunking_and_knowledgegraph_spark.sources.synthetic import corpus_df
 
 
+def _pack(sentences, **kw):
+    """The engine packer's chunks: stream slices of ``pack_spans``."""
+    stream, spans = pack_spans(sentences, **kw)
+    return [stream[a:a + n] for a, n in spans]
+
+
 def test_pack_length_policy():
     sents = ["x" * 50 + "."] * 40  # 40 sentences of 51 chars
-    chunks = pack_chunks(sents)
+    chunks = _pack(sents)
     assert all(len(c) <= HARD_MAX for c in chunks)
     assert all(len(c) >= MIN_LEN for c in chunks[:-1])
 
@@ -35,28 +45,52 @@ def test_pack_length_policy():
 def test_pack_small_absorb():
     # a small buffer followed by a medium sentence must be absorbed, not
     # emitted undersized (queue-absorb semantics)
-    chunks = pack_chunks(["a" * 100, "b" * 750])
+    chunks = _pack(["a" * 100, "b" * 750])
     assert len(chunks) == 1
     assert len(chunks[0]) == 851
 
 
 def test_pack_giant_sentence_hard_split():
-    chunks = pack_chunks(["g" * 5000])
+    chunks = _pack(["g" * 5000])
     assert all(len(c) <= HARD_MAX for c in chunks)
     assert sum(len(c) for c in chunks) == 5000
 
 
 def test_pack_overlap():
-    chunks = pack_chunks(["s" * 100 + "."] * 30, overlap=50)
+    chunks = _pack(["s" * 100 + "."] * 30, overlap=50)
     assert len(chunks) >= 2
     for a, b in zip(chunks, chunks[1:]):
         assert b.startswith(a[-50:])
+    assert chunk_text("\n".join(["s" * 100 + "."] * 30), overlap=50) == chunks
+    # a hard split advances target_max - overlap = 700 chars: six 800-char
+    # cuts, then the 800-char remainder, together covering all 5000
+    giant = _pack(["g" * 5000], overlap=100)
+    assert [len(c) for c in giant] == [800] * 7
+
+
+@pytest.mark.parametrize("overlap", [-1, 800, 900])
+def test_invalid_overlap_rejected(overlap, monkeypatch):
+    """Out-of-range overlap used to loop forever (800), silently drop text
+    (900) or act as 0 (negative); it must fail loudly -- in the packer, in
+    PipelineConfig, and in job.py before a Spark session starts."""
+    with pytest.raises(ValueError, match="overlap"):
+        pack_spans(["g" * 5000], overlap=overlap)
+    with pytest.raises(ValueError, match="overlap"):
+        PipelineConfig(overlap=overlap)
+
+    def _no_spark(**_kw):
+        raise AssertionError("Spark session started before overlap validation")
+
+    monkeypatch.setattr(job, "build_session", _no_spark)
+    with pytest.raises(SystemExit) as exc:
+        job.main(["--source", "unused.parquet", "--overlap", str(overlap)])
+    assert exc.value.code == 2
 
 
 @settings(max_examples=50, deadline=None)
 @given(st.lists(st.text(alphabet="abc词 ", min_size=1, max_size=300), max_size=40))
 def test_pack_policy_property(sents):
-    chunks = pack_chunks([s for s in sents if s.strip()])
+    chunks = _pack([s for s in sents if s.strip()])
     assert all(len(c) <= HARD_MAX for c in chunks)
     assert all(len(c) >= MIN_LEN for c in chunks[:-1])
 

@@ -1,18 +1,120 @@
 """The fused single-pass extractor must be plan-for-plan equivalent to the
 unfused two-branch pipeline: identical triple sets (all columns), identical
-chunk-id referential integrity. The fused path is the production hot path
-(one Arrow crossing per doc); the unfused path is the readable spec."""
+chunk-id referential integrity. The fused path is the engine's only
+extraction path (one Arrow crossing per doc); the unfused path below is the
+readable spec, kept here as its differential comparator."""
 
+from collections.abc import Iterator
+
+import pandas as pd
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from textchunking_and_knowledgegraph_spark.operators.canonicalize import merge_dedup
 from textchunking_and_knowledgegraph_spark.operators.chunker import chunk_documents
 from textchunking_and_knowledgegraph_spark.operators.extract import (
+    _CODE_EXTRACTORS,
+    PRED_CONTAINS,
+    PRED_HYPERNYM,
+    PRED_PEER,
+    PRED_TEXTBLOCK,
+    _extract_svo,
     doc_facts,
-    extract_all_triples,
     triples_from_facts,
 )
 from textchunking_and_knowledgegraph_spark.plans.pipeline import prepared_source
+from textchunking_and_knowledgegraph_spark.sources.io import TRIPLE_SCHEMA
 from textchunking_and_knowledgegraph_spark.sources.synthetic import corpus_df
+
+
+def structural_triples(chunks: DataFrame) -> DataFrame:
+    """Chunk table -> hierarchy + text-block triples, as pure column ops:
+    two selects unioned; hierarchy edges deduped per document."""
+    md = chunks.filter(F.col("level") > 0)
+    flat = chunks.filter(F.col("level") == 0)  # code/text: synthetic root
+
+    prov = [F.col("repo"), F.col("path"), F.col("commit"), F.col("sha")]
+
+    # (chapter 同位 chapter) for root sections / (parent 上位 section) nested
+    hier = (
+        md.select(
+            F.when(F.col("is_root"), F.col("section_title"))
+            .otherwise(F.col("parent_title"))
+            .alias("subj"),
+            F.when(F.col("is_root"), F.lit(PRED_PEER))
+            .otherwise(F.lit(PRED_HYPERNYM))
+            .alias("pred"),
+            F.col("section_title").alias("obj"),
+            F.lit("section").alias("subj_type"),
+            F.lit("section").alias("obj_type"),
+            *prov,
+            F.lit(None).cast("string").alias("chunk_id"),
+        )
+        .dropDuplicates(["subj", "pred", "obj", "sha"])
+    )
+
+    textblock = md.select(
+        F.col("section_title").alias("subj"),
+        F.lit(PRED_TEXTBLOCK).alias("pred"),
+        F.col("chunk_id").alias("obj"),
+        F.lit("section").alias("subj_type"),
+        F.lit("chunk").alias("obj_type"),
+        *prov,
+        F.col("chunk_id"),
+    )
+
+    contains = flat.select(
+        F.col("path").alias("subj"),
+        F.lit(PRED_CONTAINS).alias("pred"),
+        F.col("chunk_id").alias("obj"),
+        F.lit("file").alias("subj_type"),
+        F.lit("chunk").alias("obj_type"),
+        *prov,
+        F.col("chunk_id"),
+    )
+
+    return hier.unionByName(textblock).unionByName(contains)
+
+
+def content_triples(source: DataFrame) -> DataFrame:
+    """Whole-file extraction pass, separate from the chunker: code triples
+    for code langs, SVO for prose langs."""
+    cols = ["repo", "path", "commit", "lang", "sha", "content"]
+    field_names = [f.name for f in TRIPLE_SCHEMA.fields]
+
+    def _map_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: list[dict] = []
+            for row in pdf[cols].to_dict("records"):
+                lang = (row["lang"] or "").lower()
+                content = row["content"] or ""
+                extractor = _CODE_EXTRACTORS.get(lang)
+                trips = (
+                    extractor(row["path"], content)
+                    if extractor
+                    else _extract_svo(row["path"], content)
+                )
+                for subj, pred, obj, st, ot in trips:
+                    out.append(
+                        {
+                            "subj": subj, "pred": pred, "obj": obj,
+                            "subj_type": st, "obj_type": ot,
+                            "repo": row["repo"], "path": row["path"],
+                            "commit": row["commit"], "sha": row["sha"],
+                            "chunk_id": None,
+                        }
+                    )
+            yield pd.DataFrame(out, columns=field_names)
+
+    return source.select(*cols).mapInPandas(_map_batches, schema=TRIPLE_SCHEMA)
+
+
+def extract_all_triples(source: DataFrame, chunks: DataFrame) -> DataFrame:
+    """Union of structural and content triples, deduplicated on the
+    canonical key."""
+    out = structural_triples(chunks).unionByName(content_triples(source))
+    return merge_dedup(out, out.columns)
 
 
 def _rows(df):

@@ -175,6 +175,7 @@ def test_hierarchy_edge_count_is_linear_in_path_length(spark):
 
 # round-4 codecs: encode->decode identity over arbitrary pixel/sample data
 
+from hypothesis import example as _example_codec
 from hypothesis import given as _given_codec
 from hypothesis import settings as _settings_codec
 from hypothesis import strategies as _st_codec
@@ -234,9 +235,9 @@ def test_wav_roundtrip_property(samples, rate):
 
 
 # round-5 codecs/spans: PNG identity over every scanline filter and color
-# layout; pack_spans slice-equivalence with pack_chunks (the kg_chunks
-# oracle's foundation); dyadic SRP sign exactness (the ann_srp_topk
-# oracle's foundation)
+# layout; pack_spans slice-equivalence with the pack_chunks comparator (the
+# kg_chunks oracle's foundation); dyadic SRP sign exactness (the
+# ann_srp_topk oracle's foundation)
 
 @_settings_codec(deadline=None, max_examples=40)
 @_given_codec(
@@ -285,33 +286,84 @@ def test_png_rejects_unsupported_variants():
         decode_png(good[:30])  # truncated
 
 
+def pack_chunks(
+    sentences: list[str],
+    min_len: int = 600,
+    target_max: int = 800,
+    hard_max: int = 1000,
+    overlap: int = 0,
+    joiner: str = " ",
+) -> list[str]:
+    """String-building greedy packer under the LumberChunker length policy
+    -- the comparator ``pack_spans`` must match slice for slice. The
+    buffer is literal text: a soft emit carries the chunk's last
+    ``overlap`` chars into the next buffer, a hard split keeps the buffer
+    from ``target_max - overlap`` on."""
+    chunks: list[str] = []
+    buf = ""
+    for s in sentences:
+        if not s:
+            continue
+        sep = joiner if buf else ""
+        if len(buf) + len(sep) + len(s) <= target_max:
+            buf = buf + sep + s
+        elif len(buf) >= min_len:
+            chunks.append(buf)
+            tail = buf[-overlap:] if overlap > 0 else ""
+            buf = (tail + joiner + s) if tail else s
+        else:
+            buf = buf + sep + s  # SMALL absorb, may exceed target_max
+        while len(buf) > hard_max:  # LARGE: hard split at the target ceiling
+            chunks.append(buf[:target_max])
+            buf = buf[target_max - overlap:]
+    if buf.strip():
+        chunks.append(buf)
+    return chunks
+
+
 @_settings_codec(deadline=None, max_examples=80)
 @_given_codec(
-    _st_codec.lists(
-        _st_codec.text(
-            alphabet=_st_codec.characters(
-                codec="utf-8", exclude_categories=("Cs",)
+    _st_codec.one_of(
+        _st_codec.lists(
+            _st_codec.text(
+                alphabet=_st_codec.characters(
+                    codec="utf-8", exclude_categories=("Cs",)
+                ),
+                min_size=0,
+                max_size=300,
             ),
             min_size=0,
-            max_size=300,
+            max_size=30,
         ),
-        min_size=0,
-        max_size=30,
-    )
+        # long runs: random text rarely fills an 800-char buffer, so these
+        # reach the soft-emit carry and the hard split on most examples
+        _st_codec.lists(
+            _st_codec.builds(
+                lambda unit, n: unit * n,
+                _st_codec.sampled_from(["ab", "词。", " "]),
+                _st_codec.integers(1, 600),
+            ),
+            max_size=30,
+        ),
+    ),
+    _st_codec.one_of(_st_codec.just(0), _st_codec.integers(0, 799)),
 )
-def test_pack_spans_matches_pack_chunks(sentences):
+@_example_codec(["a" * 700, "b" * 200], 750)  # carry longer than the chunk
+def test_pack_spans_matches_pack_chunks(sentences, overlap):
     """The kg_chunks oracle's foundation: pack_spans' stream slices must
-    equal pack_chunks' output byte-for-byte for ANY sentence list, and the
-    spans must satisfy the coverage contract the oracle checks in SQL
-    (start at 0, gaps in {0,1} with the gap char == joiner, end == stream
-    end unless the final buffer was whitespace-only)."""
+    equal pack_chunks' output byte-for-byte for ANY sentence list and any
+    overlap in [0, TARGET_MAX), and the spans must satisfy the coverage
+    contract the oracle checks in SQL (start at 0, gaps in {0,1} with the
+    gap char == joiner -- or back by at most ``overlap`` chars -- and end
+    == stream end unless the final buffer was whitespace-only)."""
     from textchunking_and_knowledgegraph_spark.operators.chunker import (
-        pack_chunks,
+        TARGET_MAX,
         pack_spans,
     )
 
-    want = pack_chunks(sentences)
-    stream, spans = pack_spans(sentences)
+    assert overlap < TARGET_MAX
+    want = pack_chunks(sentences, overlap=overlap)
+    stream, spans = pack_spans(sentences, overlap=overlap)
     got = [stream[a:a + n] for a, n in spans]
     assert got == want
     prev_end = None
@@ -321,7 +373,7 @@ def test_pack_spans_matches_pack_chunks(sentences):
             assert a == 0
         else:
             gap = a - prev_end
-            assert gap in (0, 1)
+            assert -overlap <= gap <= 1
             if gap == 1:
                 assert stream[prev_end] == " "
         prev_end = a + n
@@ -430,6 +482,25 @@ def test_jpeg_rejects_unsupported_variants():
         decode_jpeg(bytes(body))
     with pytest.raises(ValueError):
         decode_jpeg(good[: len(good) // 2])  # truncated scan
+
+
+def test_jpeg_rejects_baseline_scan_missing_a_component():
+    """A baseline SOS that lists only some frame components (the first scan
+    of a multi-scan baseline file) must raise ValueError, not KeyError."""
+    import numpy as _np
+
+    from textchunking_and_knowledgegraph_spark.operators.jpeg import (
+        decode_jpeg,
+        encode_jpeg,
+    )
+
+    good = encode_jpeg(_np.zeros((8, 8, 3), _np.uint8))
+    body = bytearray(good)
+    at = body.find(b"\xff\xda")
+    assert at > 0 and body[at + 4] == 3  # Ns: all three components
+    body[at + 4] = 2  # the scan now omits the third (Cr) component
+    with pytest.raises(ValueError, match="frame component"):
+        decode_jpeg(bytes(body))
 
 
 def test_jpeg_restart_marker_roundtrip():
@@ -543,3 +614,25 @@ def test_png_palette_and_subbyte_gray_decode():
     out2 = decode_png(png2)
     assert out2.shape == (1, 5)
     assert list(out2[0]) == [0, 85, 170, 255, 0]  # scaled by 255/(2^2-1)
+
+
+def test_png_rejects_trns_color_key_for_rgb():
+    """A tRNS chunk on a gray/RGB image is a color key the decoder does not
+    apply; it must raise ValueError instead of being silently ignored."""
+    import numpy as _np
+
+    from textchunking_and_knowledgegraph_spark.operators.multimodal import (
+        _png_chunk,
+        decode_png,
+        encode_png,
+    )
+
+    good = encode_png(_np.zeros((2, 2, 3), _np.uint8))
+    ihdr_end = 8 + 12 + 13  # signature + IHDR (len, type, 13 bytes, crc)
+    assert good[12:16] == b"IHDR"
+    keyed = (good[:ihdr_end]
+             + _png_chunk(b"tRNS", bytes([0, 0, 0, 0, 0, 0]))
+             + good[ihdr_end:])
+    assert decode_png(good).shape == (2, 2, 3)
+    with pytest.raises(ValueError, match="tRNS"):
+        decode_png(keyed)

@@ -149,20 +149,22 @@ def main(argv: list[str] | None = None) -> int:
                          "self-contained (store_text=True): omit it.")
     args = ap.parse_args(argv)
 
+    try:  # validated before the (slow) Spark session starts
+        cfg = PipelineConfig(
+            overlap=args.overlap,
+            salt_partitions=args.salt_partitions,
+            canonicalize=args.canonicalize,
+        )
+    except ValueError as e:
+        ap.error(str(e))
+
     spark = build_session(app_name="tckg-job", master=args.master)
-    dictionary = None
     if args.dictionary:
         if args.dictionary.endswith(".csv"):
-            dictionary = spark.read.csv(args.dictionary, header=True)
+            cfg.dictionary = spark.read.csv(args.dictionary, header=True)
         else:
-            dictionary = spark.read.parquet(args.dictionary)
-    cfg = PipelineConfig(
-        overlap=args.overlap,
-        salt_partitions=args.salt_partitions,
-        canonicalize=args.canonicalize,
-        link_entities=dictionary is not None,
-        dictionary=dictionary,
-    )
+            cfg.dictionary = spark.read.parquet(args.dictionary)
+        cfg.link_entities = True
 
     if args.docs_table:
         source = docs_as_source(spark, args.source)

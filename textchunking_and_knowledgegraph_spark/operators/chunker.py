@@ -25,10 +25,10 @@ Reference semantics re-derived (NOT ported):
 
 The ``overlap`` parameter implements the north rule's "recursive fixed-overlap
 chunking" variant: when >0, each emitted chunk's last ``overlap`` characters
-are carried into the next chunk. Default 0 = reference parity (chunks
-partition the text exactly; reassembly == source), which the golden tests
-freeze. POLICY IS FROZEN -- any change must regenerate goldens in the same
-commit (SURVEY.md 7.4).
+are carried into the next chunk (valid range [0, TARGET_MAX)). Default 0 =
+reference parity (chunks partition the text exactly; reassembly == source),
+which the golden tests freeze. POLICY IS FROZEN -- any change must
+regenerate goldens in the same commit (SURVEY.md 7.4).
 """
 
 from __future__ import annotations
@@ -126,43 +126,11 @@ def split_sentences(text: str, code: bool = False) -> list[str]:
     return out
 
 
-def pack_chunks(
-    sentences: list[str],
-    min_len: int = MIN_LEN,
-    target_max: int = TARGET_MAX,
-    hard_max: int = HARD_MAX,
-    overlap: int = 0,
-    joiner: str = " ",
-) -> list[str]:
-    """Greedy sentence packing under the frozen LumberChunker length policy.
-
-    Guarantees: every emitted chunk <= hard_max; every non-final chunk
-    >= min_len; target band [min_len, target_max] hit whenever sentence
-    granularity allows. SMALL buffers absorb following sentences past
-    target_max (up to hard_max) rather than emitting undersized chunks --
-    the reference's question-queue absorb semantics.
-    """
-    chunks: list[str] = []
-    buf = ""
-    for s in sentences:
-        if not s:
-            continue
-        sep = joiner if buf else ""
-        if len(buf) + len(sep) + len(s) <= target_max:
-            buf = buf + sep + s
-        elif len(buf) >= min_len:
-            chunks.append(buf)
-            tail = buf[-overlap:] if overlap > 0 else ""
-            buf = (tail + joiner + s) if tail else s
-        else:
-            buf = buf + sep + s  # SMALL absorb, may exceed target_max
-        while len(buf) > hard_max:  # LARGE: hard split at the target ceiling
-            chunks.append(buf[:target_max])
-            keep_from = target_max - overlap if overlap > 0 else target_max
-            buf = buf[keep_from:]
-    if buf.strip():
-        chunks.append(buf)
-    return chunks
+def check_overlap(overlap: int, target_max: int = TARGET_MAX) -> None:
+    """0 <= overlap < target_max: a larger carry would make a hard split
+    step backwards (or not at all) through the stream."""
+    if not 0 <= overlap < target_max:
+        raise ValueError(f"overlap must be in [0, {target_max}), got {overlap}")
 
 
 def pack_spans(
@@ -170,25 +138,34 @@ def pack_spans(
     min_len: int = MIN_LEN,
     target_max: int = TARGET_MAX,
     hard_max: int = HARD_MAX,
+    overlap: int = 0,
     joiner: str = " ",
 ) -> tuple[str, list[tuple[int, int]]]:
-    """Span-tracking twin of ``pack_chunks`` (overlap=0 only): returns the
-    joined sentence stream plus (start, len) spans such that
-    ``[stream[a:a+n] for a, n in spans] == pack_chunks(sentences)`` (pinned
-    by a hypothesis property test AND re-asserted inside the contract UDF).
+    """Greedy sentence packing under the frozen LumberChunker length policy.
 
-    The spans make the packing's OUTPUT relationship independently
-    checkable in plain SQL: every chunk is a contiguous slice of the
-    stream; consecutive chunks leave a gap of exactly one joiner char at a
-    soft boundary and zero at a hard split; the first chunk starts at 0 and
-    the last ends at the stream end -- the kg_chunks oracle re-cuts the
-    text with substr and verifies coverage + the [1,1000]/>=600 length
-    contract from these facts alone."""
+    Returns the joined sentence stream plus (start, len) spans; chunk i is
+    ``stream[a:a+n]``. Guarantees: every chunk <= hard_max; every non-final
+    chunk >= min_len; target band [min_len, target_max] hit whenever
+    sentence granularity allows. SMALL buffers absorb following sentences
+    past target_max (up to hard_max) rather than emitting undersized chunks
+    -- the reference's question-queue absorb semantics.
+
+    ``overlap`` is span arithmetic: a soft emit restarts the buffer at the
+    chunk's last ``overlap`` chars (instead of at the next sentence), and a
+    hard split advances by ``target_max - overlap``.
+
+    With overlap=0 the spans make the packing's OUTPUT relationship
+    independently checkable in plain SQL: consecutive chunks leave a gap of
+    exactly one joiner char at a soft boundary and zero at a hard split; the
+    first chunk starts at 0 and the last ends at the stream end -- the
+    kg_chunks oracle re-cuts the text with substr and verifies coverage +
+    the [1,1000]/>=600 length contract from these facts alone."""
+    check_overlap(overlap, target_max)
     sents = [s for s in sentences if s]
     stream = joiner.join(sents)
     spans: list[tuple[int, int]] = []
     pos = 0    # stream offset where the current buffer starts
-    blen = 0   # current buffer length
+    blen = 0   # current buffer length (the buffer always ends a sentence)
     off = 0    # stream offset of the current sentence
     for s in sents:
         s_start = off
@@ -199,39 +176,40 @@ def pack_spans(
             blen += len(joiner) + len(s)
         elif blen >= min_len:
             spans.append((pos, blen))
-            pos, blen = s_start, len(s)
+            keep = min(overlap, blen)
+            pos = pos + blen - keep if keep else s_start
+            blen = s_start + len(s) - pos
         else:
             blen += len(joiner) + len(s)  # SMALL absorb
         while blen > hard_max:  # LARGE: hard split at the target ceiling
             spans.append((pos, target_max))
-            pos += target_max
-            blen -= target_max
+            pos += target_max - overlap
+            blen -= target_max - overlap
     if blen and stream[pos : pos + blen].strip():
         spans.append((pos, blen))
     return stream, spans
 
 
-def chunk_text_spans(text: str, code: bool = False) -> tuple[str, list[tuple[int, int]]]:
-    """``chunk_text`` with provenance: (sentence stream, chunk spans).
-    Contract/verification path only -- the engine path stays chunk_text."""
+def chunk_text_spans(
+    text: str, code: bool = False, overlap: int = 0
+) -> tuple[str, list[tuple[int, int]]]:
+    """Protect atomic blocks -> split sentences -> restore per sentence ->
+    pack; returns (sentence stream, chunk spans). Restoring before packing
+    mirrors the reference (which rebuilds the sentence queue with blocks
+    inlined, `TextBook_LumberChunker.py:363-376`): a protected block is
+    never *sentence*-split, and packing sees true lengths."""
     if code:
-        return pack_spans(split_sentences(text, code=True))
-    protected, saved = protect_blocks(text)
-    sents = [restore_blocks(s, saved) for s in split_sentences(protected)]
-    return pack_spans(sents)
+        sents = split_sentences(text, code=True)
+    else:
+        protected, saved = protect_blocks(text)
+        sents = [restore_blocks(s, saved) for s in split_sentences(protected)]
+    return pack_spans(sents, overlap=overlap)
 
 
 def chunk_text(text: str, code: bool = False, overlap: int = 0) -> list[str]:
-    """Protect atomic blocks -> split sentences -> restore per sentence ->
-    pack. Restoring before packing mirrors the reference (which rebuilds the
-    sentence queue with blocks inlined, `TextBook_LumberChunker.py:363-376`):
-    a protected block is never *sentence*-split, and packing sees true
-    lengths."""
-    if code:
-        return pack_chunks(split_sentences(text, code=True), overlap=overlap)
-    protected, saved = protect_blocks(text)
-    sents = [restore_blocks(s, saved) for s in split_sentences(protected)]
-    return pack_chunks(sents, overlap=overlap)
+    """``chunk_text_spans`` cut into chunk strings."""
+    stream, spans = chunk_text_spans(text, code=code, overlap=overlap)
+    return [stream[a : a + n] for a, n in spans]
 
 
 @dataclass
@@ -296,10 +274,9 @@ def _chunk_row(row: dict, overlap: int, with_spans: bool = False) -> Iterator[di
     """One source row -> chunk rows. Pure function, runs inside mapInPandas.
 
     ``with_spans=True`` (contract/verification path, overlap=0 only)
-    additionally emits (sec_ord, stream_start, sec_stream) provenance and
-    asserts in-UDF that the span slices reproduce the engine path's chunks
-    byte-for-byte -- so the split-lineage parquet can never drift from what
-    ``chunk_text`` actually emits."""
+    additionally emits (sec_ord, stream_start, sec_stream) provenance: the
+    chunk text is by construction the ``stream_start`` slice of the
+    section's sentence stream."""
     content = row["content"] or ""
     lang = (row["lang"] or "").lower()
     code = lang in _CODE_LANGS
@@ -314,19 +291,10 @@ def _chunk_row(row: dict, overlap: int, with_spans: bool = False) -> Iterator[di
         body = "\n".join(sec.lines)
         if not body.strip():
             continue
-        if with_spans:
-            stream, spans = chunk_text_spans(body, code=code)
-            pieces = [(stream[a : a + n], a) for a, n in spans]
-            engine = chunk_text(body, code=code, overlap=0)
-            if [p[0] for p in pieces] != engine:
-                raise AssertionError(
-                    f"pack_spans diverged from pack_chunks for doc "
-                    f"{row['doc_id']} section {sec_ord}"
-                )
-        else:
-            pieces = [(c, None) for c in chunk_text(body, code=code, overlap=overlap)]
+        stream, spans = chunk_text_spans(body, code=code, overlap=overlap)
         emitted_in_sec = False
-        for chunk, stream_start in pieces:
+        for stream_start, n in spans:
+            chunk = stream[stream_start : stream_start + n]
             if not chunk.strip():
                 continue  # F7 empty-chunk filter
             extra = (
@@ -375,6 +343,7 @@ def chunk_documents(
     (sec_ord, stream_start, sec_stream) provenance columns so an external
     SQL oracle can re-cut every chunk from its section's sentence stream
     and verify coverage + the length contract (see pack_spans)."""
+    check_overlap(overlap)
     if with_spans and overlap:
         raise ValueError("with_spans supports overlap=0 only (spans are "
                          "contiguous stream slices)")

@@ -439,6 +439,9 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
 
 def _decode_scan(payload, at, frame, sel, qtabs, huff, restart_interval):
     comps = frame["comps"]
+    if any(c["id"] not in sel for c in comps):
+        raise ValueError("baseline JPEG scan does not cover every frame "
+                         "component (multi-scan baseline not supported)")
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
     if hmax > 2 or vmax > 2 or any(

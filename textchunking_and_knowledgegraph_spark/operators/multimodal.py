@@ -306,7 +306,7 @@ def decode_png(payload: bytes) -> np.ndarray:
     gray and palette, 8 for the multi-channel types; both progressive
     layouts -- sequential and Adam7 interlaced; PLTE lookup with optional
     tRNS (palette images with transparency decode to RGBA). 16-bit depth
-    rejects loudly rather than being misread. Output shapes: HxW (gray),
+    and a gray/RGB tRNS color key reject loudly rather than being misread. Output shapes: HxW (gray),
     HxWx2 (gray+alpha), HxWx3 (RGB / opaque palette), HxWx4 (RGBA /
     palette+tRNS). Pure stdlib zlib + numpy; ancillary chunks are skipped
     by walking the chunk list, matching real-world files."""
@@ -347,6 +347,8 @@ def decode_png(payload: bytes) -> np.ndarray:
         )
     if color_type == 3 and plte is None:
         raise ValueError("palette PNG missing PLTE chunk")
+    if trns is not None and color_type != 3:
+        raise ValueError("PNG tRNS color key is supported for palette images only")
     if w <= 0 or h <= 0:
         raise ValueError("bad PNG dimensions")
     raw = zlib.decompress(bytes(idat))

@@ -4,10 +4,9 @@
       -> scan (+sha256 invariant, +doc_id, lang filter pushed to files)
       -> normalize (column expressions, codegen)
       -> salted repartition (skew control; compute skew, not join skew)
-      -> chunk (mapInPandas, Arrow)                         [branch A]
-      -> structural triples (column algebra)
-      -> content triples (code/SVO extractors, mapInPandas) [branch B]
-      -> union + dedup
+      -> doc facts: chunk spans + code/SVO content triples
+         (one mapInPandas Arrow pass per document)
+      -> triple assembly (column algebra: explode + MERGE dedup)
       -> (optional) entity linking (MinHash-LSH) + canonicalization
          (normalization-key alias groups)
       -> vertex/edge tables
@@ -26,13 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.normalize import normalize_markdown
-from ..operators.chunker import chunk_documents
-from ..operators.extract import (
-    doc_facts,
-    extract_all_triples,
-    structural_triples,
-    triples_from_facts,
-)
+from ..operators.chunker import check_overlap, chunk_documents
+from ..operators.extract import doc_facts, triples_from_facts
 from ..sources.io import estimate_input_splits, salted_repartition, scan_source
 
 
@@ -45,6 +39,9 @@ class PipelineConfig:
     link_entities: bool = False
     canonicalize: bool = False
     dictionary: DataFrame | None = None  # entity dictionary for J1/J2 linking
+
+    def __post_init__(self) -> None:
+        check_overlap(self.overlap)
 
 
 def prepared_source(spark: SparkSession, source, cfg: PipelineConfig | None = None) -> DataFrame:
@@ -113,10 +110,8 @@ def build_triples(spark: SparkSession, source, cfg: PipelineConfig | None = None
 
     Uses the fused single-pass extractor (``doc_facts``): content crosses the
     Arrow boundary exactly once per document and only compact span/triple
-    arrays come back -- the unfused two-branch plan
-    (``extract_all_triples(src, chunk_documents(src))``) ships the corpus
-    into Python twice and all chunk text back, which is the bottleneck at
-    scale. Equivalence of the two plans is asserted in tests.
+    arrays come back; ``triples_from_facts`` assembles the triples in the
+    JVM.
 
     With linking on, ``triples`` feeds both the linker and the union with
     its links; Spark does not reuse the extraction subtree across the two
@@ -182,5 +177,4 @@ __all__ = [
     "build_chunks",
     "build_triples",
     "build_vertices",
-    "structural_triples",
 ]
